@@ -21,14 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE  # noqa: E402
 from feature_engineering_spark.session import get_spark  # noqa: E402
-
-DEFAULT = [
-    "asof_join_events", "backfill_interp", "sessionize_events",
-    "rolling_causal_stats", "lag_lead_delta", "sliding_window_agg",
-    "window_features_35", "group_topstats", "join_orders_customer",
-    "text_quality", "dedup_exact", "minhash_lsh_dedup", "ann_topk",
-]
 
 
 def main() -> None:
@@ -43,7 +37,7 @@ def main() -> None:
     ap.add_argument("--suffix", default="before")
     args = ap.parse_args()
 
-    names = args.queries.split(",") if args.queries else DEFAULT
+    names = args.queries.split(",") if args.queries else HEADLINE
     load = tuple(float(x) for x in open("/proc/loadavg").read().split()[:3])
     spark = get_spark("fes-bench-extra")
 

@@ -14,9 +14,11 @@ Scale design notes (the point of each operator is its shuffle shape):
   is the scale path — hyperplane sign bits scan-side, band-bucket join,
   exact in-bucket cosine verify; the all-pairs operator is the recall
   oracle for tests only.
-- all LSH candidate generators cap bucket sizes: near-identical
-  mega-clusters are the exact-dedup pass's responsibility, never a
-  quadratic join.
+- all LSH candidate generators cap bucket sizes (``_cap_buckets``): the
+  batch self-join (``_candidates_from_banded``) and the incremental index
+  probe (``_lsh_probe``, shared by the MinHash and SRP arrival paths) are
+  the only LSH candidate generators; near-identical mega-clusters are the
+  exact-dedup pass's responsibility, never a quadratic join.
 """
 
 from __future__ import annotations
@@ -294,6 +296,99 @@ def _candidates_from_banded(
     )
 
 
+def _lsh_probe(
+    banded_new: DataFrame,
+    corpus_banded: DataFrame,
+    max_bucket_size: int | None,
+    intermediates: dict | None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(cross, in_batch)`` candidate pairs of an arriving batch's
+    (id, band, bucket) banding against a committed, append-only LSH index
+    of the same shape — THE probe protocol of both incremental operators
+    (``minhash_lsh_incremental``, ``embedding_lsh_incremental``).
+
+    - the batch banding is capped on its own bucket counts;
+    - the capped batch's distinct (band, bucket) probe set BROADCASTS into
+      one scan of the append-only index, once per batch — the index is
+      never shuffled;
+    - the matched index rows are capped on their own counts: a corpus
+      bucket's population within the matched subset equals its full-index
+      population, so this is exactly the full-index cap at a fraction of
+      the cost;
+    - ``cross`` (a = corpus id, b = batch id) joins the capped sides on
+      (band, bucket); ``in_batch`` (a < b) self-joins the already-capped
+      batch banding, so it takes no second cap pass.
+
+    The caps are per side: a bucket split across index and batch is
+    capped on each side's count, not their sum. ``intermediates`` (when
+    given) receives ``banded_new`` and ``hit`` — the batch banding and the
+    matched index rows BEFORE their caps — so callers can emit
+    ``lsh_dropped_bucket_stats`` for both caps (no silent caps)."""
+    if intermediates is not None:
+        intermediates["banded_new"] = banded_new
+    banded_new = _cap_buckets(banded_new, max_bucket_size)
+    probe = banded_new.select("band", "bucket").distinct()
+    hit = corpus_banded.join(F.broadcast(probe), ["band", "bucket"])
+    if intermediates is not None:
+        intermediates["hit"] = hit
+    hit = _cap_buckets(hit, max_bucket_size)
+    cross = (
+        hit.select("band", "bucket", F.col("id").alias("a"))
+        .join(
+            banded_new.select("band", "bucket", F.col("id").alias("b")),
+            ["band", "bucket"],
+        )
+        .select("a", "b")
+        .distinct()
+    )
+    return cross, _candidates_from_banded(banded_new, max_bucket_size=None)
+
+
+def _jaccard(x, y):
+    """Exact Jaccard of two shingle arrays (0 when both are empty)."""
+    inter = F.size(F.array_intersect(x, y))
+    union = F.size(F.array_union(x, y))
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
+def _cosine(x, y):
+    """Exact cosine of two array<double> vectors (dot and norms as
+    left-associated folds)."""
+    dot = F.aggregate(
+        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, p: acc + p
+    )
+    norm = lambda v: F.sqrt(  # noqa: E731
+        F.aggregate(v, F.lit(0.0), lambda acc, p: acc + p * p)
+    )
+    return dot / (norm(x) * norm(y))
+
+
+# metric -> (value column of the (id, value) verify frames, exact score)
+_METRICS = {"jaccard": ("sh", _jaccard), "cosine": ("v", _cosine)}
+
+
+def _verify(
+    cand: DataFrame, ga: DataFrame, gb: DataFrame, metric: str, threshold: float
+) -> DataFrame:
+    """Verified ``(a, b, <metric>)`` pairs: ``cand ⋈ ga on a ⋈ gb on b``
+    scored exactly and kept when ``>= threshold``. ``ga``/``gb`` are
+    (id, sh) shingle frames for ``"jaccard"``, (id, v) vector frames for
+    ``"cosine"``."""
+    val, score = _METRICS[metric]
+    j = cand.join(
+        ga.withColumnRenamed("id", "a").withColumnRenamed(val, val + "a"), "a"
+    ).join(gb.withColumnRenamed("id", "b").withColumnRenamed(val, val + "b"), "b")
+    s = score(F.col(val + "a"), F.col(val + "b"))
+    return j.select("a", "b", s.alias(metric)).where(F.col(metric) >= threshold)
+
+
+def _vectors(df: DataFrame, emb: str, id_col: str) -> DataFrame:
+    """(id, v: array<double>) — the cosine verify frame."""
+    return df.select(
+        F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
+    )
+
+
 def minhash_lsh_candidates(
     sig: DataFrame,
     bands: int = 8,
@@ -371,16 +466,7 @@ def minhash_lsh_dedup_parts(
         df.join(F.broadcast(ids), df[id_col] == ids["id"], "left_semi"),
         text, id_col, shingle_n, shingle_unit,
     )
-    j = (
-        cand.join(gc.withColumnRenamed("id", "a").withColumnRenamed("sh", "sha"), "a")
-        .join(gc.withColumnRenamed("id", "b").withColumnRenamed("sh", "shb"), "b")
-    )
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-    union = F.size(F.array_union(F.col("sha"), F.col("shb")))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    pairs = j.select("a", "b", jac.alias("jaccard")).where(
-        F.col("jaccard") >= threshold
-    )
+    pairs = _verify(cand, gc, gc, "jaccard", threshold)
     return pairs, banded, [sig, cand]
 
 
@@ -437,57 +523,32 @@ def minhash_lsh_incremental(
     MUST use the same num_hashes/bands/shingle_n) — and its ``corpus``
     text is re-read only for the candidate ids (semi-join pruned).
 
-    Scale shape (10^12-doc corpus, 10^6-doc batch):
-    - the batch's (band, bucket) probe set BROADCASTS into one scan of
-      the index — the index is never shuffled;
-    - bucket caps mirror minhash_lsh_candidates and are computed on the
-      matched buckets only (a corpus bucket's population within the
-      matched subset equals its full-index population, so this is
-      exactly the full-index cap at a fraction of the cost);
-    - exact-Jaccard verification shingles the batch plus the candidate
-      corpus rows only.
+    Candidates come from ``_lsh_probe`` (the shared index-probe protocol:
+    per-side bucket caps, broadcast probe, ``banded_new``/``hit``
+    intermediates); exact-Jaccard verification shingles the batch plus
+    the candidate corpus rows only.
 
     The batch shingle frame is persisted for reuse across the signature
     pass and both verify arms; single-consumption callers can leave it to
     session cleanup (see minhash_lsh_dedup's caching note).
 
-    ``intermediates``: optional dict the operator fills with
-    ``banded_new`` (the batch banding BEFORE its cap), ``hit`` (the
-    matched corpus index rows BEFORE their cap) so callers can emit
-    ``lsh_dropped_bucket_stats`` for both caps — no silent caps — and
+    ``intermediates``: optional dict filled with ``_lsh_probe``'s keys and
     ``shingles`` (the PERSISTED batch shingle frame) so long-lived
     callers unpersist it once pairs/stats are materialized: without
     that, every ingest batch / streaming micro-batch would leak one
     cached frame for the session lifetime (jobs/ingest_increment.py and
     streaming_neardup_filter both clean up)."""
-    rows_per_band = num_hashes // bands
     g_new = _shingle_frame(
         new_docs, text, id_col, shingle_n, shingle_unit
     ).persist()
-    sig_new = _signatures_from_shingles(g_new, num_hashes)
-    banded_new = _band_signature(sig_new, bands, rows_per_band)
     if intermediates is not None:
-        intermediates["banded_new"] = banded_new
         intermediates["shingles"] = g_new
-    banded_new = _cap_buckets(banded_new, max_bucket_size)
-
-    # --- cross candidates: probe the committed index with the batch
-    probe = banded_new.select("band", "bucket").distinct()
-    hit = corpus_banded.join(F.broadcast(probe), ["band", "bucket"])
-    if intermediates is not None:
-        intermediates["hit"] = hit
-    hit = _cap_buckets(hit, max_bucket_size)
-    cross = (
-        hit.select("band", "bucket", F.col("id").alias("a"))
-        .join(
-            banded_new.select("band", "bucket", F.col("id").alias("b")),
-            ["band", "bucket"],
-        )
-        .select("a", "b")
-        .distinct()
+    banded_new = _band_signature(
+        _signatures_from_shingles(g_new, num_hashes), bands, num_hashes // bands
     )
-
-    # --- exact verify: shingle ONLY the candidate corpus rows
+    cross, batch_cand = _lsh_probe(
+        banded_new, corpus_banded, max_bucket_size, intermediates
+    )
     g_corp = _shingle_frame(
         corpus.join(
             cross.select(F.col("a").alias(id_col)).distinct(),
@@ -495,23 +556,8 @@ def minhash_lsh_incremental(
         ),
         text, id_col, shingle_n, shingle_unit,
     )
-
-    def _verify(cand: DataFrame, ga: DataFrame, gb: DataFrame) -> DataFrame:
-        j = (
-            cand.join(ga.withColumnRenamed("id", "a").withColumnRenamed("sh", "sha"), "a")
-            .join(gb.withColumnRenamed("id", "b").withColumnRenamed("sh", "shb"), "b")
-        )
-        inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-        union = F.size(F.array_union(F.col("sha"), F.col("shb")))
-        jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-        return j.select("a", "b", jac.alias("jaccard")).where(
-            F.col("jaccard") >= threshold
-        )
-
-    # in-batch pairs: banded_new is already capped, so no second cap pass
-    batch_cand = _candidates_from_banded(banded_new, max_bucket_size=None)
-    return _verify(cross, g_corp, g_new).unionByName(
-        _verify(batch_cand, g_new, g_new)
+    return _verify(cross, g_corp, g_new, "jaccard", threshold).unionByName(
+        _verify(batch_cand, g_new, g_new, "jaccard", threshold)
     )
 
 
@@ -805,39 +851,11 @@ def embedding_neardup_lsh(
     P(bit agree) = 1 - angle/pi (Goemans-Williamson); P(candidate) =
     1 - (1 - p^r)^bands.
     """
-    planes = srp_hyperplanes(dim, nbits, seed)
-    banded = srp_signature_buckets(df, planes, bands, emb, id_col)
-    banded = _cap_buckets(banded, max_bucket_size)
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .distinct()
+    cand = _candidates_from_banded(
+        srp_banded(df, dim, emb, id_col, nbits, bands, seed), max_bucket_size
     )
-    vv = df.select(
-        F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
-    )
-    j = (
-        cand.join(vv.withColumnRenamed("id", "a").withColumnRenamed("v", "va"), "a")
-        .join(vv.withColumnRenamed("id", "b").withColumnRenamed("v", "vb"), "b")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    cos = dot / (norm("va") * norm("vb"))
-    return j.select("a", "b", cos.alias("cosine")).where(
-        F.col("cosine") >= threshold
-    )
+    vv = _vectors(df, emb, id_col)
+    return _verify(cand, vv, vv, "cosine", threshold)
 
 
 def srp_banded(
@@ -885,78 +903,29 @@ def embedding_lsh_incremental(
     dim/nbits/bands/seed) — and its vectors are re-read only for the
     candidate ids (semi-join pruned).
 
-    Scale shape (10^9-vector corpus, 10^6-vector batch):
-    - the batch's distinct (band, bucket) probe set BROADCASTS into one
-      scan of the index — the index is never shuffled;
-    - bucket caps mirror ``embedding_neardup_lsh`` and are computed on the
-      matched index rows only (a corpus bucket's population within the
-      matched subset equals its full-index population — exactly the
-      full-index cap at a fraction of the cost);
-    - exact-cosine verification fetches corpus vectors for candidate ids
-      only. The batch is scanned twice (signature pass + verify arm) —
-      for a typical arriving batch that is cheaper than managing a
-      persisted cache; persist upstream if the batch itself is huge.
-
-    ``intermediates``: optional dict filled with ``banded_new`` (batch
-    banding BEFORE its cap) and ``hit`` (matched corpus index rows BEFORE
-    their cap) for ``lsh_dropped_bucket_stats`` — no silent caps.
+    Candidates come from ``_lsh_probe`` (the shared index-probe protocol);
+    ``intermediates`` receives its ``banded_new``/``hit`` frames.
+    Exact-cosine verification fetches corpus vectors for candidate ids
+    only. The batch is scanned twice (signature pass + verify arm) — for
+    a typical arriving batch that is cheaper than managing a persisted
+    cache; persist upstream if the batch itself is huge.
 
     Without this operator a continuously-ingested corpus accumulates
     embedding-near duplicates that the batch ``embedding_neardup_lsh``
     would have caught (round-4 verdict, "What's missing" #2)."""
-    banded_new = srp_banded(new_vecs, dim, emb, id_col, nbits, bands, seed)
-    if intermediates is not None:
-        intermediates["banded_new"] = banded_new
-    banded_new = _cap_buckets(banded_new, max_bucket_size)
-
-    # --- cross candidates: probe the committed index with the batch
-    probe = banded_new.select("band", "bucket").distinct()
-    hit = corpus_banded.join(F.broadcast(probe), ["band", "bucket"])
-    if intermediates is not None:
-        intermediates["hit"] = hit
-    hit = _cap_buckets(hit, max_bucket_size)
-    cross = (
-        hit.select("band", "bucket", F.col("id").alias("a"))
-        .join(
-            banded_new.select("band", "bucket", F.col("id").alias("b")),
-            ["band", "bucket"],
-        )
-        .select("a", "b")
-        .distinct()
+    cross, batch_cand = _lsh_probe(
+        srp_banded(new_vecs, dim, emb, id_col, nbits, bands, seed),
+        corpus_banded, max_bucket_size, intermediates,
     )
-
-    # --- exact verify: fetch ONLY the candidate corpus vectors
-    v_new = new_vecs.select(
-        F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
+    v_new = _vectors(new_vecs, emb, id_col)
+    v_corp = _vectors(
+        corpus.join(
+            cross.select(F.col("a").alias(id_col)).distinct(), id_col, "left_semi"
+        ),
+        emb, id_col,
     )
-    v_corp = corpus.join(
-        cross.select(F.col("a").alias(id_col)).distinct(), id_col, "left_semi"
-    ).select(
-        F.col(id_col).alias("id"), F.col(emb).cast("array<double>").alias("v")
-    )
-
-    def _verify(cand: DataFrame, ga: DataFrame, gb: DataFrame) -> DataFrame:
-        j = (
-            cand.join(ga.withColumnRenamed("id", "a").withColumnRenamed("v", "va"), "a")
-            .join(gb.withColumnRenamed("id", "b").withColumnRenamed("v", "vb"), "b")
-        )
-        dot = F.aggregate(
-            F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        norm = lambda c: F.sqrt(  # noqa: E731
-            F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-        )
-        cos = dot / (norm("va") * norm("vb"))
-        return j.select("a", "b", cos.alias("cosine")).where(
-            F.col("cosine") >= threshold
-        )
-
-    # in-batch pairs: banded_new is already capped, so no second cap pass
-    batch_cand = _candidates_from_banded(banded_new, max_bucket_size=None)
-    return _verify(cross, v_corp, v_new).unionByName(
-        _verify(batch_cand, v_new, v_new)
+    return _verify(cross, v_corp, v_new, "cosine", threshold).unionByName(
+        _verify(batch_cand, v_new, v_new, "cosine", threshold)
     )
 
 
@@ -1485,3 +1454,37 @@ def trim_contained_runs(
             "n_tokens_removed"
         ),
     )
+
+
+def trim_flagged_overlaps(
+    batch: DataFrame,
+    pairs: DataFrame,
+    corpus: DataFrame,
+    text: str = "text",
+    id_col: str = "doc_id",
+    k: int = 5,
+) -> DataFrame:
+    """Publish-ready rows of an arriving ``batch`` given its overlap
+    ``pairs`` (winnow_overlap_incremental output): every flagged b-side
+    doc has its contained runs excised (trim_contained_runs) against its
+    partners from ``corpus ∪ batch``, every other doc passes through
+    untouched. Emits (id_col, text, n_tokens_kept, n_tokens_removed) for
+    every batch doc. The partner set excludes flagged ids
+    (overlap_partner_ids), so a doc in both roles is never trimmed
+    against its own grams. Shared by jobs/ingest_increment.py and
+    streaming_overlap_trim."""
+    b_ids = pairs.select(F.col("b").alias(id_col)).distinct()
+    partners = corpus.unionByName(batch.select(*corpus.columns)).join(
+        overlap_partner_ids(pairs, id_col), id_col, "left_semi"
+    )
+    trimmed = trim_contained_runs(
+        batch.join(b_ids, id_col, "left_semi"), partners,
+        text=text, id_col=id_col, k=k,
+    )
+    untouched = batch.join(b_ids, id_col, "left_anti").select(
+        id_col,
+        text,
+        F.size(F.split(F.col(text), " ")).cast("long").alias("n_tokens_kept"),
+        F.lit(0).cast("long").alias("n_tokens_removed"),
+    )
+    return trimmed.unionByName(untouched)

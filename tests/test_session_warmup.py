@@ -17,7 +17,7 @@ def test_warmup_runs_once_per_session(spark, monkeypatch):
     assert getattr(s2, "_fes_warmed", False)
 
 
-def test_warmup_env_optout(monkeypatch):
+def test_warmup_env_optout(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_WARMUP", "0")
     calls = []
     import feature_engineering_spark.session as S

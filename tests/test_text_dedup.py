@@ -466,19 +466,10 @@ def test_all_pairs_guard_raises(spark):
     assert embedding_neardup_pairs(vecs, threshold=1.1, max_rows=20).count() == 0
 
 
-def test_embed_incremental_matches_full_lsh(spark):
-    """Incremental embedding dedup (batch vs committed SRP index +
-    in-batch) must find exactly the pairs the FULL corpus-wide SRP dedup
-    finds, restricted to pairs touching the batch — the embedding twin of
-    test_minhash_incremental_matches_full_dedup. On fixtures far from the
-    bucket caps the per-side and combined cap policies coincide, so pair
-    sets and cosines are identical. Only the batch is signed; corpus
-    vectors are fetched for candidate ids only."""
-    from feature_engineering_spark.operators.dedup import (
-        embedding_lsh_incremental,
-        srp_banded,
-    )
-
+@pytest.fixture(scope="module")
+def srp_near_dup_vecs(spark):
+    """(corpus, batch) of 16-d vectors: 40 random corpus vectors, 12 batch
+    near-dups of corpus vectors and 4 in-batch near pairs."""
     rng = np.random.default_rng(17)
     base = rng.normal(size=(40, 16))
     corp_rows = [(i, base[i].tolist()) for i in range(40)]
@@ -493,8 +484,26 @@ def test_embed_incremental_matches_full_lsh(spark):
             (201 + 2 * i, (v + rng.normal(scale=0.03, size=16)).tolist())
         )
     schema = "vec_id long, embedding array<double>"
-    corpus = spark.createDataFrame(corp_rows, schema)
-    batch = spark.createDataFrame(batch_rows, schema)
+    return (
+        spark.createDataFrame(corp_rows, schema),
+        spark.createDataFrame(batch_rows, schema),
+    )
+
+
+def test_embed_incremental_matches_full_lsh(spark, srp_near_dup_vecs):
+    """Incremental embedding dedup (batch vs committed SRP index +
+    in-batch) must find exactly the pairs the FULL corpus-wide SRP dedup
+    finds, restricted to pairs touching the batch — the embedding twin of
+    test_minhash_incremental_matches_full_dedup. On fixtures far from the
+    bucket caps the per-side and combined cap policies coincide, so pair
+    sets and cosines are identical. Only the batch is signed; corpus
+    vectors are fetched for candidate ids only."""
+    from feature_engineering_spark.operators.dedup import (
+        embedding_lsh_incremental,
+        srp_banded,
+    )
+
+    corpus, batch = srp_near_dup_vecs
     index = srp_banded(corpus, dim=16, nbits=16, bands=4)
 
     inc = embedding_lsh_incremental(
@@ -505,7 +514,7 @@ def test_embed_incremental_matches_full_lsh(spark):
     full = embedding_neardup_lsh(
         corpus.unionByName(batch), dim=16, threshold=0.9, nbits=16, bands=4
     ).collect()
-    batch_ids = {r[0] for r in batch_rows}
+    batch_ids = {r["vec_id"] for r in batch.select("vec_id").collect()}
     exp = {}
     for r in full:
         a, b = r["a"], r["b"]
@@ -521,6 +530,78 @@ def test_embed_incremental_matches_full_lsh(spark):
     assert len(cross) >= 10  # 12 planted corpus near-dups, SRP recall high
     in_batch = {(a, b) for (a, b) in got if a in batch_ids}
     assert len(in_batch) >= 3  # 4 planted in-batch pairs
+
+
+@pytest.mark.parametrize("signal", ["minhash", "srp"])
+def test_incremental_probe_caps_both_sides(spark, request, signal):
+    """The incremental index probe caps the batch banding and the matched
+    index rows separately, and reports both caps. Planted on top of the
+    incremental-vs-full fixtures, with max_bucket_size=4: X (5 identical
+    batch docs + 1 corpus copy) overflows a batch-side bucket, Y (5
+    identical corpus docs + 1 batch copy) overflows an index-side bucket.
+    Neither yields a cross or an in-batch pair, and
+    lsh_dropped_bucket_stats over intermediates['banded_new'] / ['hit']
+    reports exactly those buckets. The identical in-batch pair W stays
+    under the cap and still pairs, as do the fixtures' cross near-dups."""
+    from feature_engineering_spark.operators.dedup import (
+        embedding_lsh_incremental,
+        lsh_dropped_bucket_stats,
+        minhash_banded,
+        minhash_lsh_incremental,
+        srp_banded,
+    )
+
+    cap = 4
+    if signal == "minhash":
+        docs = request.getfixturevalue("near_dup_docs")
+        corpus = docs.where(F.col("doc_id") % 3 != 1)
+        batch = docs.where(F.col("doc_id") % 3 == 1)
+
+        def content(tag):
+            return " ".join(f"{tag}{i}" for i in range(30))
+    else:
+        corpus, batch = request.getfixturevalue("srp_near_dup_vecs")
+        rng = np.random.default_rng(23)
+        vecs = {tag: rng.normal(size=16).tolist() for tag in "XYW"}
+        content = vecs.__getitem__
+
+    xs, ys, ws = list(range(500, 505)), list(range(600, 605)), [700, 701]
+    batch = batch.unionByName(spark.createDataFrame(
+        [(i, content("X")) for i in xs] + [(605, content("Y"))]
+        + [(i, content("W")) for i in ws],
+        batch.schema,
+    ))
+    corpus = corpus.unionByName(spark.createDataFrame(
+        [(505, content("X"))] + [(i, content("Y")) for i in ys], corpus.schema
+    ))
+
+    inter: dict = {}
+    if signal == "minhash":
+        bands = 8
+        pairs = minhash_lsh_incremental(
+            batch, corpus, minhash_banded(corpus), threshold=0.5,
+            max_bucket_size=cap, intermediates=inter,
+        )
+    else:
+        bands = 4
+        pairs = embedding_lsh_incremental(
+            batch, corpus, srp_banded(corpus, dim=16, nbits=64, bands=bands),
+            dim=16, threshold=0.9, nbits=64, bands=bands,
+            max_bucket_size=cap, intermediates=inter,
+        )
+    got = {(r["a"], r["b"]) for r in pairs.collect()}
+    capped = set(xs) | {505} | set(ys) | {605}
+    assert not [p for p in got if capped & set(p)]
+    assert (700, 701) in got
+    assert any(a < 40 for a, _ in got)  # fixture cross near-dups survive
+    for key in ("banded_new", "hit"):
+        row = lsh_dropped_bucket_stats(inter[key], cap).collect()[0]
+        assert (
+            row["n_dropped_buckets"], row["n_dropped_rows"],
+            row["max_bucket_size_seen"],
+        ) == (bands, 5 * bands, 5), key
+    if "shingles" in inter:
+        inter["shingles"].unpersist()
 
 
 def test_line_repetition_hand_rows(spark):
